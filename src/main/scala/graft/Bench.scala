@@ -1074,7 +1074,8 @@ object Bench {
     // round-over-round per-query adjudication had to be reconstructed from
     // builder-committed copies. `bench_runs_c<cpus>.json` keeps both
     // captures; the final line's `runs_file` names the one this run wrote.
-    val runsPath = sys.env.getOrElse("SPARK_GRAFT_RUNS_FILE",
+    val runsOverride = sys.env.get("SPARK_GRAFT_RUNS_FILE")
+    val runsPath = runsOverride.getOrElse(
       java.nio.file.Paths.get(sys.props("user.dir"),
         s"bench_runs_c$cpus.json").toString)
     val fullJson =
@@ -1083,12 +1084,13 @@ object Bench {
       (fullJson + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () } // sidecar is best-effort
     // legacy fixed-name copy for tooling that greps bench_runs.json —
-    // the per-cpus file above is the authoritative (non-overwritten) one
-    try {
+    // the per-cpus file above is the authoritative (non-overwritten) one.
+    // A redirected run (SPARK_GRAFT_RUNS_FILE) writes only where it was
+    // told: an A/B capture must not clobber the committed legacy copy.
+    if (runsOverride.isEmpty) try {
       val legacy = java.nio.file.Paths.get(sys.props("user.dir"),
         "bench_runs.json")
-      if (legacy.toString != runsPath)
-        java.nio.file.Files.write(legacy, (fullJson + "\n").getBytes("UTF-8"))
+      java.nio.file.Files.write(legacy, (fullJson + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
     val finalLine =
       s"""{"metric":"total","value":$totalStr,"unit":"sec","sf":"$sfDir","queries_benched":${results.size},"ingest_records":$nRecords,"ingest_records_per_sec":$rps,"ingest_sustained_records_per_sec":$sustained,"state_merge_1key_50k_sec":${f"$merge50k%1.3f"},"state_merge_1key_200k_sec":${f"$merge200k%1.3f"},"stream_banding_rows_per_sec":$streamBandingRps,"canary_median_sec":${f"$canaryMedian%1.3f"},"contended_queries":${contended.size},"capture_quality":"$captureQuality","runs_file":"$runsPath"}"""

@@ -1572,8 +1572,8 @@ object SparkEntry {
 
     // capped band candidates (the dup-dense hardening of q26): buckets over
     // the cap emit only the (bucket-min, other) star — n−1 pairs instead of
-    // n²/2 — which preserves the applyNearDedup survivor set and the
-    // nearDupClusters components (Probe-pinned). Cap forced to 2 here so
+    // n²/2 — which preserves the applyNearDedup survivor set (pinned by
+    // PlanHygieneSpec) and the nearDupClusters components. Cap forced to 2 here so
     // real sf buckets exercise BOTH the all-pairs and the star paths; the
     // oracle applies the identical size gate.
     Q("q82_capped_candidates", Some(

@@ -231,13 +231,6 @@ object Dedup {
       .withColumn("est_jaccard_pct", floor(col("est_jaccard_pct")).cast(LongType))
   }
 
-  /** Apply exact dedup: keep one row (the lowest id) per distinct content.
-    * left_semi against the survivor set — no wide shuffle of text. */
-  def applyExact(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val keep = exact(docs, textCol, idCol).select(col("keep_id").as(idCol))
-    docs.join(keep, Seq(idCol), "left_semi")
-  }
-
   /** Apply near-dedup: drop the higher-id side of every candidate pair
     * (left_anti against doc_b) — the standard "keep first occurrence"
     * near-dup policy. */
@@ -301,8 +294,8 @@ object Dedup {
 
   /**
    * Named LSH configurations for [[embeddingNearDupPairs]] with recall floors
-   * MEASURED against brute-force ground truth (Probe, sf0.1 embeddings) —
-   * the floors are asserted by the Probe run, so they are contracts, not
+   * MEASURED against brute-force ground truth (sf0.1 embeddings) — the
+   * floors are asserted by PlanHygieneSpec, so they are contracts, not
    * aspirations. Band length sets recall (collision prob at cosine c is
    * 1 − (1 − (1−acos(c)/π)^planes)^tables); the per-bucket cap bounds the
    * candidate volume either way.
@@ -339,7 +332,7 @@ object Dedup {
    * RECALL is set by the band length, and the cosine filter is a PRECISION
    * post-filter, not a completeness claim: with random hyperplanes, a pair
    * at cosine c collides in one table with prob (1−acos(c)/π)^planes.
-   * Measured against brute-force ground truth (Probe, sf0.1 embeddings):
+   * Measured against brute-force ground truth (sf0.1 embeddings):
    * the 8×12 default recalls ~5% of cos ≥ 0.4 pairs but ≥ ~90% of
    * cos ≥ 0.95 pairs — it is a TRUE-near-dup configuration. Hunting looser
    * duplicates needs a shorter band and/or more tables (8×6 measures ~44%
@@ -704,8 +697,8 @@ object Dedup {
 
   /** [[crossCorpusNearDup]] against a PRECOMPUTED reference band table
     * (from [[refCorpusBands]], typically read back from parquet). Identical
-    * output to the two-corpus form when the geometry matches — Probe pins
-    * reuse == recompute; a `__geometry` tag in the band table (present on
+    * output to the two-corpus form when the geometry matches — PipelineOpsSpec
+    * pins reuse == recompute; a `__geometry` tag in the band table (present on
     * anything [[refCorpusBands]] built) is verified row-level against this
     * call's parameters, so a stale-parameter call fails instead of silently
     * admitting everything. Hand-built band tables without the tag skip the

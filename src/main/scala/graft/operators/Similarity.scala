@@ -238,10 +238,12 @@ object Similarity {
     // work budget: the driver loop is single-threaded, so besides the row
     // cap the total multiply count (rows·k·dims·iters) must stay small
     // enough that serial beats the ~1 s of per-job scheduling it replaces;
-    // past it, fall back to the distributed loop (the probe cost one job)
+    // past it, fall back to the distributed loop (the probe cost one job).
+    // A null vector has no place in the serial arithmetic either.
     def driverWorkOk(dims: Int): Boolean =
       probe.length.toLong * k * dims * iters <= 4000000000L
     if (maxDriver > 0 && probe.length <= maxDriver && probe.nonEmpty &&
+        !probe.exists(_.isNullAt(1)) &&
         driverWorkOk(probe(0).getSeq[Long](1).length)) {
       val ids = probe.map(_.getLong(0))
       val vecs = probe.map(_.getSeq[Long](1).toArray)
@@ -432,23 +434,6 @@ object Similarity {
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** IVF probe: exact top-k within each query's own cell (single-probe). */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, nCells: Int = 8): DataFrame = {
-    val cells = ivfCells(corpus, idCol, vecCol, nCells)
-    val qv = corpus.select(col(idCol).as("item_id"), quantize(col(vecCol)).as("qv"))
-    val c = cells.join(qv, "item_id")
-    val q = c.join(queries.select(col(idCol).as("item_id")), "item_id")
-      .select(col("item_id").as("query_id"), col("cell_id").as("qcell"),
-        col("qv").as("qq"))
-    val scored = c.join(broadcast(q),
-        col("cell_id") === col("qcell") && col("item_id") =!= col("query_id"))
-      .select(col("query_id"), col("item_id"), dotQ(col("qv"), col("qq")).as("dot"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dot").desc, col("item_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
   /**
    * k-NN majority-vote classification: label each query vector by the
    * modal label of its `k` nearest labeled neighbors — the
@@ -529,9 +514,9 @@ object Similarity {
   /**
    * Recall@k of an approximate neighbor result against exact ground truth
    * — ANN quality measurement as a first-class operator (the dial every
-   * IVF/LSH deployment tunes against; until now this lived only in the
-   * Probe harness). Both inputs are (query_id, item_id, ...) top-k frames,
-   * e.g. [[ivfTopKTrained]] vs [[bruteForceTopK]]. The join keys on
+   * IVF/LSH deployment tunes against). Both inputs are (query_id,
+   * item_id, ...) top-k frames, e.g. [[ivfTopKTrained]] vs
+   * [[bruteForceTopK]]. The join keys on
    * (query, item) — k·|queries| rows a side, trivially small relative to
    * the searches that produced them.
    *

@@ -53,17 +53,6 @@ object EventTimeOps {
       .agg(count(lit(1)).as("n_events"))
   }
 
-  /** Streaming form of [[slidingCounts]]: Spark's native sliding `window()`
-    * with a watermark — state is bounded by the watermark horizon. */
-  def slidingCountsStreaming(stream: DataFrame, width: String, slide: String,
-      watermark: String = "10 minutes"): DataFrame =
-    stream
-      .withWatermark("timestamp", watermark)
-      .groupBy(window(col("timestamp"), width, slide), col("topic"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"), col("topic"),
-        col("n_events"))
-
   /** Streaming form: watermarked tumbling window (late data beyond the
     * watermark is dropped; state is bounded). */
   def tumblingCountsStreaming(stream: DataFrame, width: String,

@@ -78,4 +78,36 @@ class KmeansParitySpec extends SparkSuite {
     s.conf.unset(Similarity.DriverMaxRowsKey)
     assert(a === b)
   }
+
+  test("driver gate: a null vector sends both trainers to the distributed loop") {
+    val s = sqlc
+    import s.implicits._
+    // first row null: the driver gate read probe(0)'s vector unguarded
+    val df = corpus(200, 8).as[(Long, Seq[Double])].collect().toSeq
+      .zipWithIndex.map { case ((id, v), i) => (id, if (i == 0) null else v) }
+      .toDF("vec_id", "embedding")
+    def both[T](train: => T): (T, T) = {
+      s.conf.set(Similarity.DriverMaxRowsKey, "131072")
+      try {
+        val driver = train
+        s.conf.set(Similarity.DriverMaxRowsKey, "0")
+        (driver, train)
+      } finally s.conf.unset(Similarity.DriverMaxRowsKey)
+    }
+    val (kd, kdist) = both(collectSorted(
+      Similarity.kmeansCentroids(df, "vec_id", "embedding", k = 4, iters = 2)))
+    assert(kd.nonEmpty)
+    assert(kd === kdist)
+    // the distributed PQ loop reads its dims from a null row and rejects
+    // the corpus; the driver gate must now fail the same way, not NPE
+    def codebooks = intercept[RuntimeException](
+      Pq.trainCodebooks(df, "vec_id", "embedding",
+        numSubspaces = 2, cellsPerSub = 4, iters = 2)) match {
+      case e: org.apache.spark.SparkThrowable => e.getCondition
+      case e => e.toString
+    }
+    val (cd, cdist) = both(codebooks)
+    assert(cd === "ROW_VALUE_IS_NULL")
+    assert(cd === cdist)
+  }
 }

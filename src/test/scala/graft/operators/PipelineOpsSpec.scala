@@ -255,7 +255,7 @@ class PipelineOpsSpec extends SparkSuite {
 
   test("embedding near-dup presets: pinned configs, same plan as explicit params") {
     // the preset constants are a DOCUMENTED contract (recall floors measured
-    // in Probe against brute force) — pin them so a silent change trips here
+    // in PlanHygieneSpec against brute force) — pin them so a silent change trips here
     assert(Dedup.NearDupPreset.Strict95.numTables == 8 &&
       Dedup.NearDupPreset.Strict95.planesPerTable == 12)
     assert(Dedup.NearDupPreset.Broad40.numTables == 16 &&
